@@ -20,14 +20,33 @@ def out_dir(tmp_path):
     return str(tmp_path / "out")
 
 
+def _files_per_bucket(data_dir: str) -> dict:
+    """{bucket dir name: number of parquet files in it}."""
+    import glob
+
+    counts = {}
+    for f in glob.glob(os.path.join(data_dir, "bucket=*", "*.parquet")):
+        b = os.path.basename(os.path.dirname(f))
+        counts[b] = counts.get(b, 0) + 1
+    return counts
+
+
 def test_run_extraction_full_and_resume(spark, transcripts_df, out_dir):
-    r1 = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    # 8 input splits: without a shuffle by bucket every split would open
+    # its own file in every bucket it touches
+    r1 = run_extraction(spark, transcripts_df.repartition(8), out_dir,
+                        run_id="r1", n_buckets=8)
     assert r1.buckets_processed > 0
     assert r1.n_turns == transcripts_df.count()
     turns = spark.read.parquet(os.path.join(out_dir, "turns_extracted"))
     assert turns.count() == r1.n_turns
     spans = spark.read.parquet(os.path.join(out_dir, "product_spans"))
     assert spans.count() == r1.n_spans > 0
+    # right-sized at write time: one file per bucket in every dataset
+    for sub in ("turns_extracted", "product_spans", "lineage"):
+        per_bucket = _files_per_bucket(os.path.join(out_dir, sub))
+        assert len(per_bucket) == r1.buckets_processed, sub
+        assert max(per_bucket.values()) == 1, (sub, per_bucket)
 
     # resume: everything already processed → nothing recomputed
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
@@ -53,6 +72,19 @@ def test_run_extraction_partial_resume(spark, transcripts_df, out_dir):
     assert r1.buckets_processed + r2.buckets_processed == full.buckets_processed
     total = spark.read.parquet(os.path.join(out_dir, "turns_extracted")).count()
     assert total == full.n_turns
+
+
+def test_run_extraction_rejects_unreadable_manifest(spark, transcripts_df, out_dir):
+    """A manifest that exists but cannot be read must fail the run, not
+    be taken for a fresh run that silently recomputes every bucket —
+    and the run must fail before it writes any output."""
+    manifest_dir = os.path.join(out_dir, "manifest")
+    os.makedirs(manifest_dir)
+    with open(os.path.join(manifest_dir, "part-0.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        run_extraction(spark, transcripts_df, out_dir, run_id="bad", n_buckets=8)
+    assert sorted(os.listdir(out_dir)) == ["manifest"]
 
 
 def test_lineage_counters(spark, transcripts_df, out_dir):
@@ -469,8 +501,13 @@ def test_merge_turns_keyed_upsert(spark, transcripts_df, tmp_path):
     assert after.filter(F.col("lang") == "MERGED").count() == 3
     # key uniqueness preserved
     assert after.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
-    # only the buckets holding new keys were rewritten
+    # only the buckets holding new keys were rewritten, each one whole
+    # into a single file
     assert 0 < len(stats["buckets_rewritten"]) <= 8
+    per_bucket = _files_per_bucket(turns_dir)
+    assert all(
+        per_bucket[f"bucket={b}"] == 1 for b in stats["buckets_rewritten"]
+    ), per_bucket
     # the dynamic-overwrite conf is scoped to the write, not left on the
     # shared session (a later plain partitioned overwrite elsewhere would
     # silently become per-partition)
@@ -562,36 +599,6 @@ def test_xml_html_excel_sinks(spark, transcripts_df, tmp_path):
         summary = ET.fromstring(z.read("xl/worksheets/sheet3.xml"))
         srows = summary.findall(f"{ns}sheetData/{ns}row")
         assert len(srows) >= 2  # header + ≥1 category census row
-
-
-def test_compact_buckets(spark, transcripts_df, tmp_path):
-    """Fragmented buckets (high write parallelism) compact to one file
-    each with byte-identical content."""
-    import glob
-    from pyspark.sql import functions as F
-    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
-        compact_buckets,
-    )
-
-    # the directory name contains a space: input_file_name()-style URIs
-    # percent-encode it, which broke the old per-file getsize path — the
-    # _metadata aggregate must be encoding-agnostic
-    data_dir = str(tmp_path / "frag out")
-    turns = extract_turns(transcripts_df.limit(400)).drop("spans")
-    bucketed = turns.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")
-    )
-    bucketed.repartition(16).write.partitionBy("bucket").parquet(data_dir)
-    before_files = glob.glob(f"{data_dir}/bucket=*/*.parquet")
-    before = {tuple(r) for r in spark.read.parquet(data_dir).collect()}
-    assert len(before_files) > 8  # genuinely fragmented
-
-    stats = compact_buckets(spark, data_dir, target_file_bytes=1 << 30)
-    after_files = glob.glob(f"{data_dir}/bucket=*/*.parquet")
-    after = {tuple(r) for r in spark.read.parquet(data_dir).collect()}
-    assert after == before
-    assert len(after_files) == stats["files_after"] <= 4
-    assert stats["files_before"] == len(before_files)
 
 
 def test_streaming_microbatch_rate(spark, transcripts_df, tmp_path):

@@ -18,8 +18,13 @@ replaces exactly that bucket's files (the parquet analog of Iceberg
 `writeTo(...).overwritePartitions()` on a cluster with an Iceberg catalog).
 
 Scale: the bucket column is both the resume unit and the output partition
-key.  Extraction itself stays a narrow map; the only added wide operation
-is the resume semi-join against the (tiny, broadcast) manifest.
+key.  Extraction itself stays a narrow map.  Every bucketed write goes
+through ``_write_buckets``, which rebalances rows by bucket first (one
+shuffle of the extracted rows per dataset), so each bucket lands as
+ceil(bucket bytes / advisory partition size) files instead of one file per
+input task: AQE coalesces small buckets into one task and splits a skewed
+one.  The other wide operation is the resume semi-join against the (tiny,
+broadcast) manifest.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Optional
+from typing import List
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,26 +71,56 @@ class RunResult:
     wall_sec: float
 
 
-def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Add the layout column ``bucket = pmod(xxhash64(conv_id), n_buckets)``
+    — the one bucket formula every bucketed dataset in the package uses."""
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     )
 
 
+def _write_buckets(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Overwrite exactly the buckets present in ``df`` under ``path``.
+
+    The REBALANCE hint shuffles rows by bucket before the write, so a task
+    holds whole buckets and opens one file per bucket it holds; without it
+    every input task opens a file in every bucket (tasks × buckets small
+    files).  AQE sizes the tasks: small buckets coalesce into one task, a
+    bucket over the advisory partition size is split instead of landing on
+    one straggler."""
+    with _dynamic_partition_overwrite(spark):
+        (
+            df.hint("rebalance", "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(path)
+        )
+
+
+def _missing_path(ex: Exception) -> bool:
+    msg = str(ex)
+    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+
+
 def _processed_buckets(spark: SparkSession, manifest_dir: str) -> List[int]:
-    # existence pre-check: probing a fresh dir via read.parquet would be
-    # caught below anyway, but the JVM logs the AnalysisException stack
-    # to stderr — needless alarm on every first run (local paths only;
-    # an object-store deployment swaps in its own listing call)
-    if not os.path.isdir(manifest_dir):
+    """Bucket ids already in the manifest.  Only a missing manifest means
+    "fresh run"; any other read error (corrupt footer, permissions) is
+    raised — swallowing it would silently recompute every bucket."""
+    # existence pre-check: probing a fresh dir via read.parquet makes the
+    # JVM log the AnalysisException stack to stderr — needless alarm on
+    # every first run; the _missing_path fallback stays for non-local URIs
+    # where isdir() can't see the store
+    if not (os.path.isdir(manifest_dir) or "://" in manifest_dir):
         return []
     try:
         return [
             r["bucket"]
             for r in spark.read.parquet(manifest_dir).select("bucket").distinct().collect()
         ]
-    except Exception:
-        return []  # manifest unreadable/partial — treat as fresh run
+    except Exception as ex:
+        if _missing_path(ex):
+            return []
+        raise
 
 
 def merge_turns(
@@ -105,7 +140,7 @@ def merge_turns(
     on disk is untouched (dynamic partition overwrite).  ``new_turns`` is
     extraction output (``extract_turns(...).drop("spans")``).
     """
-    new_b = _with_bucket(new_turns, n_buckets).persist()
+    new_b = with_bucket(new_turns, n_buckets).persist()
     # MERGE contract: the source must be key-unique (Iceberg raises
     # "multiple matching rows"; silently keeping both would corrupt the
     # target's key uniqueness)
@@ -127,10 +162,6 @@ def merge_turns(
     # a missing path means "not there"; any other read error (permissions,
     # corrupt footer) must NOT fall through to a write that would
     # dynamic-overwrite existing buckets with partial data.
-    def _missing_path(ex: Exception) -> bool:
-        msg = str(ex)
-        return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
     meta_dir = turns_dir.rstrip("/") + "_meta"
     stored = None
     # pre-check local existence so the fresh-target path never fires an
@@ -169,8 +200,7 @@ def merge_turns(
     # the merged affected buckets must be fully materialized before the
     # overwrite deletes their source files
     merged = merged.localCheckpoint(eager=True)
-    with _dynamic_partition_overwrite(spark):
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(turns_dir)
+    _write_buckets(spark, merged, turns_dir)
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
@@ -200,15 +230,13 @@ def run_extraction(
     lineage_dir = os.path.join(out_dir, "lineage")
     manifest_dir = os.path.join(out_dir, "manifest")
 
-    df = _with_bucket(transcripts, n_buckets)
+    df = with_bucket(transcripts, n_buckets)
 
     done = _processed_buckets(spark, manifest_dir) if resume else []
     if done:
         df = df.filter(~F.col("bucket").isin(done))
 
-    turns = extract_turns(df).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
+    turns = with_bucket(extract_turns(df), n_buckets)
     turns.persist()
 
     # todo buckets come from the persisted extraction output — one cheap
@@ -222,18 +250,9 @@ def run_extraction(
         return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
                           round(time.monotonic() - t0, 3))
 
-    with _dynamic_partition_overwrite(spark):
-        (
-            turns.drop("spans")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(turns_dir)
-        )
-        # bucket is a pure function of conv_id — recompute, don't re-join
-        spans = explode_spans(turns).withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        )
-        spans.write.mode("overwrite").partitionBy("bucket").parquet(spans_dir)
+    _write_buckets(spark, turns.drop("spans"), turns_dir)
+    # bucket is a pure function of conv_id — recompute, don't re-join
+    _write_buckets(spark, with_bucket(explode_spans(turns), n_buckets), spans_dir)
 
     # per-bucket lineage counters (A7 generalization); partitioned dynamic
     # overwrite, NOT append — a crash-and-resume rerun of a bucket replaces
@@ -250,8 +269,7 @@ def run_extraction(
         )
         .withColumn("run_id", F.lit(run_id))
     )
-    with _dynamic_partition_overwrite(spark):
-        lineage.write.mode("overwrite").partitionBy("bucket").parquet(lineage_dir)
+    _write_buckets(spark, lineage, lineage_dir)
 
     totals = turns.select(
         F.count("*").alias("n_turns"), F.sum("n_spans").alias("n_spans")
@@ -276,63 +294,3 @@ def run_extraction(
         wall_sec=round(time.monotonic() - t0, 3),
     )
 
-
-def compact_buckets(
-    spark: SparkSession,
-    data_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    buckets: Optional[List[int]] = None,
-) -> dict:
-    """Small-file compaction for a bucket-partitioned dataset: rewrite
-    each selected bucket into ceil(bucket_bytes / target) files.
-
-    Incremental writers (streaming micro-batches, repeated merge_turns)
-    fragment buckets into many small parquet files; at scale that
-    degrades scan planning and shuffle-read efficiency.  Content is
-    byte-preserved (read → coalesce-by-size → dynamic partition
-    overwrite of exactly the selected buckets).
-    """
-    import math as _math
-
-    df = spark.read.parquet(data_dir)
-    if buckets is not None:
-        df = df.filter(F.col("bucket").isin(list(buckets)))
-    # Per-bucket byte sizes via the _metadata hidden column — a fully
-    # distributed aggregate over (file_path, file_size) pairs, so the
-    # driver materializes only one row per BUCKET regardless of file
-    # count (the earlier per-file collect + os.path.getsize broke on
-    # percent-encoded paths and non-local schemes, and listed millions
-    # of rows at 100 TB).  file_path is constant within a file, so
-    # distinct() dedups to one row per file before the rollup.
-    bucket_stats = (
-        df.select(
-            F.col("_metadata.file_path").alias("f"),
-            F.col("_metadata.file_size").alias("nbytes"),
-            F.col("bucket"),
-        )
-        .distinct()
-        .groupBy("bucket")
-        .agg(F.sum("nbytes").alias("nbytes"), F.count("*").alias("n_files"))
-        .collect()
-    )
-    sizes = {int(r["bucket"]): int(r["nbytes"]) for r in bucket_stats}
-    n_files_before = sum(int(r["n_files"]) for r in bucket_stats)
-    rewritten = {}
-    for b, nbytes in sorted(sizes.items()):
-        n_out = max(1, _math.ceil(nbytes / target_file_bytes))
-        # materialize BEFORE the overwrite deletes the source files of the
-        # very bucket being read (same read-write-same-path hazard as
-        # merge_turns)
-        sub = (
-            df.filter(F.col("bucket") == b)
-            .repartition(n_out)
-            .localCheckpoint(eager=True)
-        )
-        with _dynamic_partition_overwrite(spark):
-            sub.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)
-        rewritten[b] = n_out
-    return {
-        "buckets_compacted": sorted(rewritten),
-        "files_before": n_files_before,
-        "files_after": sum(rewritten.values()),
-    }

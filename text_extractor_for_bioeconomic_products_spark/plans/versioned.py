@@ -81,6 +81,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import with_bucket
+
 KEY_COLS = ("conv_id", "turn_idx")
 
 
@@ -252,9 +254,7 @@ def commit_merge(
     elif n_buckets is None:
         n_buckets = 8
 
-    keyed = new_rows.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    ).persist()
+    keyed = with_bucket(new_rows, n_buckets).persist()
     try:
         dup = (
             keyed.groupBy(*KEY_COLS).count().filter(F.col("count") > 1).count()
@@ -539,9 +539,7 @@ def compact(
     data_dir = os.path.join(table_dir, "data")
     run_id = f"compact-{uuid.uuid4().hex[:8]}"
 
-    snapshot = read_version(spark, table_dir, base).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(to_buckets)).cast("int")
-    ).persist()
+    snapshot = with_bucket(read_version(spark, table_dir, base), to_buckets).persist()
     new_buckets: dict = {}
     new_files = []
     try:

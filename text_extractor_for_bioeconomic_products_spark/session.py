@@ -12,6 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _quarter_of_ram() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 4 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "text_extractor_spark",
     master: str | None = None,
@@ -20,11 +25,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    shuffle_partitions defaults to the core count — on a real cluster this
-    is set to ~2-3× total executor cores instead; AQE coalesces down.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    host's core count).  shuffle_partitions defaults to the core count — on
+    a real cluster this is set to ~2-3× total executor cores instead; AQE
+    coalesces down.  ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM``
+    (env, default: a quarter of the host's physical RAM).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or cpus
 
@@ -55,7 +62,8 @@ def get_spark(
         # still bounded per worker).  Size by expected row bytes when
         # deploying against a different corpus shape.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _quarter_of_ram())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

@@ -43,19 +43,6 @@ def write_spans_json(spans: DataFrame, path: str) -> None:
     )
 
 
-def write_turns_parquet(turns: DataFrame, path: str, n_buckets: int = 64) -> None:
-    """Default analytic sink: bucket-partitioned parquet so downstream
-    per-conversation work prunes partitions (Iceberg table swap-in point)."""
-    (
-        turns.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
 def write_spans_xml(spans: DataFrame, path: str, limit: int = 100000) -> None:
     """S11 XML sink (export_manager.py:323-402): a single presentation
     document mirroring the reference's <products><product>... structure.

@@ -822,6 +822,10 @@ def run_streaming_sessionizer(
                 start, last, n, vm, first_eid = open_sess
                 open_sess = (min(start, epoch), max(last, epoch), n + 1,
                              vm + micro, min(first_eid, eid))
+        if open_sess is None:
+            # a new key whose events all had a null ts: nothing to open,
+            # no state to keep, no timer to arm
+            return
         state.update(open_sess)
         # arm the close timer; must stay ahead of the current watermark
         desired_ms = (open_sess[1] + gap_sec) * 1000 + 1
