@@ -3,7 +3,7 @@
 
 Measures
   1. headline query latencies at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-     local[$SPARK_GRAFT_CPUS] (default 32), and
+     local[$SPARK_GRAFT_CPUS] (default: the host's core count), and
   2. extraction throughput (turns/sec) over synthesized transcripts at two
      parallelism levels (default pair local[2] vs local[8], measured on a
      SCALE_MULT× corpus — default 5× — SCALE_REPEATS INTERLEAVED rounds:
@@ -30,7 +30,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the host's core count unless SPARK_GRAFT_CPUS says otherwise — the rule
+# session.get_spark uses
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 BENCH_TMP = os.environ.get("SPARK_GRAFT_BENCH_TMP", "/tmp/spark_graft_bench")
 
 # conversations scale with sf; sized so extraction compute dominates task

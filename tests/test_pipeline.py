@@ -31,6 +31,15 @@ def _files_per_bucket(data_dir: str) -> dict:
     return counts
 
 
+def _files(data_dir: str) -> set:
+    """Every file under ``data_dir``, as paths relative to it."""
+    return {
+        os.path.relpath(os.path.join(root, f), data_dir)
+        for root, _dirs, files in os.walk(data_dir)
+        for f in files
+    }
+
+
 def test_run_extraction_full_and_resume(spark, transcripts_df, out_dir):
     # 8 input splits: without a shuffle by bucket every split would open
     # its own file in every bucket it touches
@@ -48,11 +57,36 @@ def test_run_extraction_full_and_resume(spark, transcripts_df, out_dir):
         assert len(per_bucket) == r1.buckets_processed, sub
         assert max(per_bucket.values()) == 1, (sub, per_bucket)
 
-    # resume: everything already processed → nothing recomputed
+    # resume: everything already processed → nothing recomputed, and
+    # nothing written: no lineage rows, no manifest entries
+    written = {sub: _files(os.path.join(out_dir, sub)) for sub in ("lineage", "manifest")}
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
     assert r2.buckets_processed == 0
     assert r2.buckets_skipped == r1.buckets_processed
     assert spark.read.parquet(os.path.join(out_dir, "turns_extracted")).count() == r1.n_turns
+    assert {sub: _files(os.path.join(out_dir, sub)) for sub in written} == written
+
+
+def test_run_extraction_job_count(spark, transcripts_df, out_dir):
+    """The extracted rows are shuffled once, into a cache clustered by
+    bucket, and aggregated once: the todo list, the totals and the lineage
+    rows all come from one per-bucket aggregate, the writes read the cache
+    with no Exchange, and lineage and manifest go in through Arrow.
+
+    On this fixture (8 input splits, 8 buckets, local[4]) a call launched
+    15 Spark jobs when every write rebalanced on its own and todo, totals
+    and lineage were separate passes; it launches 8 now."""
+    sc = spark.sparkContext
+    group = "test_run_extraction_job_count"
+    df = transcripts_df.repartition(8)
+    sc.setJobGroup(group, group)
+    try:
+        r = run_extraction(spark, df, out_dir, run_id="jobs", n_buckets=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r.buckets_processed > 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 8, sorted(jobs)
 
 
 def test_run_extraction_partial_resume(spark, transcripts_df, out_dir):
@@ -87,7 +121,28 @@ def test_run_extraction_rejects_unreadable_manifest(spark, transcripts_df, out_d
     assert sorted(os.listdir(out_dir)) == ["manifest"]
 
 
+def _footer_schema(data_dir: str) -> list:
+    """(name, Spark type, nullable) of the columns stored in the parquet
+    files under ``data_dir``, from the Spark schema in the file footer;
+    every file must carry the same one."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    schemas = {
+        pq.read_metadata(f).metadata[key]
+        for f in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+    }
+    assert len(schemas) == 1, schemas
+    fields = json.loads(schemas.pop())["fields"]
+    return [(f["name"], f["type"], f["nullable"]) for f in fields]
+
+
 def test_lineage_counters(spark, transcripts_df, out_dir):
+    from pyspark.sql import functions as F
+
     r = run_extraction(spark, transcripts_df, out_dir, run_id="lin", n_buckets=8)
     lineage = spark.read.parquet(os.path.join(out_dir, "lineage"))
     rows = lineage.collect()
@@ -95,6 +150,37 @@ def test_lineage_counters(spark, transcripts_df, out_dir):
     assert sum(row["n_turns"] for row in rows) == r.n_turns
     assert sum(row["n_spans"] for row in rows) == r.n_spans
     assert all(row["n_errors"] == 0 for row in rows)
+    turns = spark.read.parquet(os.path.join(out_dir, "turns_extracted"))
+    convs = {
+        row["bucket"]: row["n"]
+        for row in turns.groupBy("bucket")
+        .agg(F.countDistinct("conv_id").alias("n"))
+        .collect()
+    }
+    assert {row["bucket"]: row["n_convs"] for row in rows} == convs
+
+    # the driver-built datasets keep the types and nullability of the
+    # aggregate that feeds them, in the footer and as Spark reads them
+    assert _footer_schema(os.path.join(out_dir, "lineage")) == [
+        ("n_turns", "long", False),
+        ("n_spans", "long", True),
+        ("n_tokens", "long", True),
+        ("n_errors", "long", True),
+        ("n_convs", "long", False),
+        ("run_id", "string", False),
+    ]
+    assert lineage.schema.simpleString() == (
+        "struct<n_turns:bigint,n_spans:bigint,n_tokens:bigint,n_errors:bigint,"
+        "n_convs:bigint,run_id:string,bucket:int>"
+    )
+    manifest_dir = os.path.join(out_dir, "manifest")
+    assert _footer_schema(manifest_dir) == [
+        ("bucket", "integer", True),
+        ("run_id", "string", True),
+    ]
+    manifest = spark.read.parquet(manifest_dir)
+    assert manifest.schema.simpleString() == "struct<bucket:int,run_id:string>"
+    assert sorted(row["bucket"] for row in manifest.collect()) == sorted(convs)
 
 
 def test_csv_sink_explode_outer_semantics(spark, transcripts_df, tmp_path):

@@ -627,3 +627,38 @@ def test_factorize_exact_distinguishes_embedded_nul_strings():
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(direct, fact)
+
+
+def test_span_tagger_failure_sets_parse_error(monkeypatch):
+    """A span-tagger exception must not read as "no products": the row
+    gets empty spans and parse_error=True, and every other row of the
+    batch is unchanged."""
+    from text_extractor_for_bioeconomic_products_spark.functions.udfs import (
+        extract_turn_features,
+    )
+
+    texts = pd.Series([
+        "Açaí is food in brasil",
+        "Tagua is carved in colombia POISON",
+        "Tagua is carved in colombia",
+        "no products here",
+        "Açaí is food in brasil",
+    ], dtype="object")
+    func = extract_turn_features.func
+    base = func(texts)
+    assert not base["parse_error"].any()
+    assert base.loc[1, "spans"], "the poisoned row must reach the tagger"
+
+    real = rules.tag_product_spans
+
+    def poisoned(text):
+        if "POISON" in text:
+            raise RuntimeError("tagger failure")
+        return real(text)
+
+    monkeypatch.setattr(rules, "tag_product_spans", poisoned)
+    got = func(texts)
+    expected = base.copy()
+    expected["parse_error"] = [i == 1 for i in range(len(texts))]
+    expected["spans"] = [[] if i == 1 else v for i, v in enumerate(base["spans"])]
+    pd.testing.assert_frame_equal(got, expected)

@@ -8,12 +8,13 @@ UDFs anywhere in the engine.
 Error tolerance mirrors the reference's per-file try/except-continue
 (pdf_processor.py:112-119): a poison row never fails the job — the batch
 falls back to per-element application and the failing row degrades to
-empty output (its error is countable downstream via length guards).
+empty output.  A failed HTML strip or span tagging sets the row's
+``parse_error``, so the degradation is counted (lineage ``n_errors``).
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, List, Optional
+from typing import Any, Callable, List, Optional, Tuple
 
 import pandas as pd
 
@@ -62,13 +63,20 @@ def _safe_map(s: pd.Series, fn: Callable[[Any], Any], default: Any) -> pd.Series
     return s.map(guarded)
 
 
-def tag_spans_series(clean: pd.Series, lower: Optional[pd.Series] = None) -> pd.Series:
+def tag_spans_series(
+    clean: pd.Series, lower: Optional[pd.Series] = None
+) -> Tuple[pd.Series, pd.Series]:
     """Span tagging with a vectorized any-gazetteer-hit prefilter: rows
     mentioning no product term (the common case at corpus scale) skip the
-    per-row tagger entirely."""
+    per-row tagger entirely.
+
+    Returns ``(spans, failed)``: a row whose tagger raised gets ``[]`` and
+    ``failed=True``, so the caller can count it instead of reading an
+    empty result as "no products"."""
     if lower is None:
         lower = clean.str.lower()
     spans = pd.Series([[]] * len(clean), index=clean.index, dtype="object")
+    failed = pd.Series(False, index=clean.index)
     # lowered prefilter (plain scan, non-capturing pattern); rows where
     # lowercasing changes length bypass it — the tagger handles those with
     # its IGNORECASE fallback, so no false negatives
@@ -76,8 +84,11 @@ def tag_spans_series(clean: pd.Series, lower: Optional[pd.Series] = None) -> pd.
         lower.str.len() != clean.str.len()
     )
     if bool(mask.any()):
-        spans.loc[mask] = _safe_map(clean[mask], rules.tag_product_spans, [])
-    return spans
+        tagged = _safe_map(clean[mask], rules.tag_product_spans, None)
+        raised = tagged.isna()
+        failed.loc[mask] = raised
+        spans.loc[mask] = tagged.map(lambda v: [] if v is None else v)
+    return spans, failed
 
 
 # ---------------------------------------------------------------------------
@@ -149,7 +160,8 @@ def _turn_features_frame(text: pd.Series) -> pd.DataFrame:
     langf = rules.detect_language_frame(clean, lower=clean_lower, kw_counts=kw)
     relevance = rules.relevance_series(clean, lower=clean_lower, kw_counts=kw)
     n_tokens = (clean.str.len() // 4).astype("int32")
-    spans = tag_spans_series(clean, lower=clean_lower)
+    spans, span_failed = tag_spans_series(clean, lower=clean_lower)
+    parse_error = parse_error | span_failed
 
     return pd.DataFrame({
         "clean_text": clean,

@@ -9,7 +9,7 @@ reference's per-file JSON outputs + combined run stats
 Layout under ``out_dir``:
     turns_extracted/   parquet, partitioned by bucket=pmod(xxhash64(conv_id), N)
     product_spans/     parquet, same bucketing
-    lineage/           one row per (run, bucket): counters + timings
+    lineage/           one row per (run, bucket): counters
     manifest/          processed-bucket ids (the checkpoint)
 
 Idempotency: writes use dynamic partition overwrite — re-running a bucket
@@ -18,13 +18,14 @@ replaces exactly that bucket's files (the parquet analog of Iceberg
 `writeTo(...).overwritePartitions()` on a cluster with an Iceberg catalog).
 
 Scale: the bucket column is both the resume unit and the output partition
-key.  Extraction itself stays a narrow map.  Every bucketed write goes
-through ``_write_buckets``, which rebalances rows by bucket first (one
-shuffle of the extracted rows per dataset), so each bucket lands as
-ceil(bucket bytes / advisory partition size) files instead of one file per
-input task: AQE coalesces small buckets into one task and splits a skewed
-one.  The other wide operation is the resume semi-join against the (tiny,
-broadcast) manifest.
+key.  Extraction itself stays a narrow map, in the input-split tasks.  Its
+output is shuffled once: a ``REBALANCE(bucket)`` before the cache clusters
+the extracted rows by bucket, so a bucket lands as one file instead of one
+file per input task (AQE splits a bucket over the advisory partition size,
+which then lands as one file per piece).  The turns and spans writes read
+that cache with no further Exchange, and one per-bucket aggregate of it
+yields the todo list, the run totals and the lineage rows.  The other wide
+operation is the resume semi-join against the (tiny, broadcast) manifest.
 """
 
 from __future__ import annotations
@@ -34,30 +35,45 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import List
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.extract import explode_spans, extract_turns
 
 N_BUCKETS_DEFAULT = 64
 
+# Lineage rows are built in the driver; typed as the Spark aggregate that
+# computes them types its columns (count/countDistinct/lit are non-null),
+# so the parquet footer does not depend on how the rows reach the writer.
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("n_turns", T.LongType(), False),
+    T.StructField("n_spans", T.LongType()),
+    T.StructField("n_tokens", T.LongType()),
+    T.StructField("n_errors", T.LongType()),
+    T.StructField("n_convs", T.LongType(), False),
+    T.StructField("run_id", T.StringType(), False),
+])
+
 
 @contextmanager
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Scope partitionOverwriteMode=dynamic to one write job.  Leaving it
-    set on the shared session would silently turn a later plain
+def _scoped_conf(spark: SparkSession, conf: dict):
+    """Set session confs for the duration of the block, then restore
+    them.  Leaving e.g. partitionOverwriteMode=dynamic set on the shared
+    session would silently turn a later plain
     mode('overwrite').partitionBy(...) elsewhere into a per-partition
     overwrite that leaves stale partitions behind."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prior = spark.conf.get(key)
-    except Exception:
-        prior = "static"
-    spark.conf.set(key, "dynamic")
+    prior = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prior)
+        for k, v in prior.items():
+            spark.conf.set(k, v)
 
 
 @dataclass
@@ -82,19 +98,15 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 def _write_buckets(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Overwrite exactly the buckets present in ``df`` under ``path``.
 
-    The REBALANCE hint shuffles rows by bucket before the write, so a task
-    holds whole buckets and opens one file per bucket it holds; without it
-    every input task opens a file in every bucket (tasks × buckets small
-    files).  AQE sizes the tasks: small buckets coalesce into one task, a
-    bucket over the advisory partition size is split instead of landing on
-    one straggler."""
-    with _dynamic_partition_overwrite(spark):
-        (
-            df.hint("rebalance", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
+    Precondition: ``df`` is already clustered by bucket — a
+    ``REBALANCE(bucket)`` upstream, or at most one row per bucket — so a
+    task opens one file per bucket it holds.  The writer adds no shuffle
+    of its own: a REBALANCE here, over a cached or checkpointed frame that
+    is already rebalanced, is not elided; Spark plans a second ``Exchange
+    REBALANCE_PARTITIONS_BY_COL``.  Input that is not clustered still
+    writes correctly, but as tasks × buckets small files."""
+    with _scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
 def _missing_path(ex: Exception) -> bool:
@@ -141,21 +153,27 @@ def merge_turns(
     extraction output (``extract_turns(...).drop("spans")``).
     """
     new_b = with_bucket(new_turns, n_buckets).persist()
-    # MERGE contract: the source must be key-unique (Iceberg raises
-    # "multiple matching rows"; silently keeping both would corrupt the
-    # target's key uniqueness)
-    dup_keys = (
-        new_b.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
+    # one pre-write aggregate: the key determines the bucket, so a bucket
+    # holding more rows than distinct keys holds a duplicate.  MERGE
+    # contract: the source must be key-unique (Iceberg raises "multiple
+    # matching rows"; silently keeping both would corrupt the target's key
+    # uniqueness).  The struct counts a null key part like groupBy does.
+    per_bucket = (
+        new_b.groupBy("bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.countDistinct(F.struct("conv_id", "turn_idx")).alias("keys"),
+        )
+        .collect()
     )
-    if dup_keys:
+    dup_rows = sum(r["rows"] - r["keys"] for r in per_bucket)
+    if dup_rows:
         new_b.unpersist()
         raise ValueError(
-            f"merge_turns: {dup_keys} duplicate (conv_id, turn_idx) keys in new_turns"
+            f"merge_turns: {dup_rows} duplicate (conv_id, turn_idx) rows in new_turns"
         )
-    affected = sorted(
-        r["bucket"] for r in new_b.select("bucket").distinct().collect()
-    )
-    n_upserted = new_b.count()
+    affected = sorted(r["bucket"] for r in per_bucket)
+    n_upserted = sum(r["rows"] for r in per_bucket)
     # the bucket modulus is part of the dataset layout: merging with a
     # different n_buckets would hash matched keys into unscanned buckets
     # and duplicate them silently — validate against the sidecar.  Only
@@ -198,13 +216,14 @@ def merge_turns(
     else:
         merged = new_b
     # the merged affected buckets must be fully materialized before the
-    # overwrite deletes their source files
-    merged = merged.localCheckpoint(eager=True)
+    # overwrite deletes their source files; clustered by bucket first,
+    # as _write_buckets expects
+    merged = merged.hint("rebalance", "bucket").localCheckpoint(eager=True)
     _write_buckets(spark, merged, turns_dir)
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
-        spark.createDataFrame([(n_buckets,)], "n_buckets int") \
+        spark.createDataFrame(pd.DataFrame({"n_buckets": [n_buckets]}), "n_buckets int") \
             .coalesce(1).write.mode("overwrite").json(meta_dir)
     new_b.unpersist()
     return {"buckets_rewritten": affected, "n_upserted": n_upserted}
@@ -236,29 +255,29 @@ def run_extraction(
     if done:
         df = df.filter(~F.col("bucket").isin(done))
 
-    turns = with_bucket(extract_turns(df), n_buckets)
-    turns.persist()
+    # the one shuffle of the extracted rows: the featurizer runs map-side
+    # in the input-split tasks, then REBALANCE(bucket) clusters its output
+    # so a cached partition holds whole buckets, and every consumer below
+    # reads the cache with no Exchange.  AQE leaves the last stage of a
+    # cached plan as planned unless canChangeCachedPlanOutputPartitioning
+    # is on when the plan is cached; on, a bucket over the advisory
+    # partition size is split, as a rebalance at write time would split
+    # it.  Coalescing stays off: small buckets keep one task per shuffle
+    # partition for the writes instead of collapsing into one task.
+    with _scoped_conf(spark, {
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }):
+        turns = (
+            with_bucket(extract_turns(df), n_buckets)
+            .hint("rebalance", "bucket")
+            .persist()
+        )
 
-    # todo buckets come from the persisted extraction output — one cheap
-    # pass over cached data, NOT an extra full scan of the input (which
-    # would double I/O at 100 TB just to enumerate a known codomain)
-    todo = sorted(
-        r["bucket"] for r in turns.select("bucket").distinct().collect()
-    )
-    if not todo:
-        turns.unpersist()
-        return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
-                          round(time.monotonic() - t0, 3))
-
-    _write_buckets(spark, turns.drop("spans"), turns_dir)
-    # bucket is a pure function of conv_id — recompute, don't re-join
-    _write_buckets(spark, with_bucket(explode_spans(turns), n_buckets), spans_dir)
-
-    # per-bucket lineage counters (A7 generalization); partitioned dynamic
-    # overwrite, NOT append — a crash-and-resume rerun of a bucket replaces
-    # its lineage row instead of duplicating it ("one row per bucket, from
-    # the attempt that durably wrote it")
-    lineage = (
+    # one aggregate, ≤ n_buckets rows, and the action that fills the
+    # cache: its buckets are the todo list, its sums the run totals, its
+    # rows the lineage — no extra pass over the extracted rows
+    stats = (
         turns.groupBy("bucket")
         .agg(
             F.count("*").alias("n_turns"),
@@ -267,19 +286,33 @@ def run_extraction(
             F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
             F.countDistinct("conv_id").alias("n_convs"),
         )
-        .withColumn("run_id", F.lit(run_id))
+        .toPandas()
+        .sort_values("bucket", ignore_index=True)
     )
-    _write_buckets(spark, lineage, lineage_dir)
+    todo = stats["bucket"].tolist()
+    if not todo:
+        turns.unpersist()
+        return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
+                          round(time.monotonic() - t0, 3))
 
-    totals = turns.select(
-        F.count("*").alias("n_turns"), F.sum("n_spans").alias("n_spans")
-    ).collect()[0]
+    _write_buckets(spark, turns.drop("spans"), turns_dir)
+    # explode is narrow, so the spans keep the turns' bucket clustering;
+    # bucket is a pure function of conv_id — recompute, don't re-join
+    _write_buckets(spark, with_bucket(explode_spans(turns), n_buckets), spans_dir)
+
+    # per-bucket lineage counters (A7 generalization); partitioned dynamic
+    # overwrite, NOT append — a crash-and-resume rerun of a bucket replaces
+    # its lineage row instead of duplicating it ("one row per bucket, from
+    # the attempt that durably wrote it").  The driver-built rows go in
+    # through Arrow: no Python worker deserializes them.
+    lineage = spark.createDataFrame(stats.assign(run_id=run_id), LINEAGE_SCHEMA)
+    _write_buckets(spark, lineage, lineage_dir)
 
     # checkpoint LAST: a bucket enters the manifest only after its data,
     # spans, and lineage are durable (crash before this line ⇒ the bucket
     # reruns; dynamic overwrite makes the rerun idempotent)
     manifest = spark.createDataFrame(
-        [(b, run_id) for b in todo], "bucket int, run_id string"
+        stats[["bucket"]].assign(run_id=run_id), "bucket int, run_id string"
     )
     manifest.write.mode("append").parquet(manifest_dir)
 
@@ -289,8 +322,8 @@ def run_extraction(
         n_buckets=n_buckets,
         buckets_processed=len(todo),
         buckets_skipped=len(done),
-        n_turns=totals["n_turns"],
-        n_spans=totals["n_spans"] or 0,
+        n_turns=int(stats["n_turns"].sum()),
+        n_spans=int(stats["n_spans"].sum()),
         wall_sec=round(time.monotonic() - t0, 3),
     )
 
